@@ -9,38 +9,73 @@ parquet reader because types are right from the start.
 from __future__ import annotations
 
 import os
+import weakref
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructType
 
 from ..schemas import CLICKSTREAM_RAW, EVENT_TIME_FORMAT, FIXTURE_TABLES
 
-# The driver fixtures store timestamps as parquet TIMESTAMP(NANOS) (written
-# by pandas/pyarrow with ns precision), which Spark's reader rejects.  All
-# fixture values are µs-aligned (verified: epoch_ns % 1000 == 0 across
-# tables), so reading nanos as long and integer-dividing to µs is lossless
-# and bit-identical to what DuckDB sees.
+# The driver fixtures store timestamps as parquet TIMESTAMP(MICROS,
+# isAdjustedToUTC=false), which Spark 4 reads as timestamp_ntz.  Parquet
+# written by pandas/pyarrow with its default ns precision is
+# TIMESTAMP(NANOS) instead, which Spark's reader rejects; with
+# ``nanosAsLong`` set such a column reads as long, and integer-dividing to
+# µs is lossless for µs-aligned values and bit-identical to what DuckDB sees.
 _TS_COLUMNS: dict[str, tuple[str, ...]] = {
     "events": ("ts",),
     "orders": ("o_orderdate",),
     "lineitem": ("l_shipdate",),
 }
 
+# Per-session memo: absolute path -> ((st_size, st_mtime_ns), schema Spark
+# resolved on the first read of that file version).  Per session because
+# session confs (``nanosAsLong`` among them) shape the resolved types.
+# Threads racing on a miss each resolve and store the same schema.
+_SCHEMAS: weakref.WeakKeyDictionary[SparkSession, dict[str, tuple[tuple[int, int], StructType]]] = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _file_version(path: str) -> tuple[int, int] | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_size, st.st_mtime_ns
+
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver fixture table from ``{sf_dir}/{name}.parquet``.
 
-    Parquet carries its own schema; the only adjustment is the nanosecond
-    timestamp conversion above (``ts div 1000`` stays in whole-stage
-    codegen; the cast is a cheap projection, no shuffle).
+    Parquet carries its own schema.  Resolving it reads the footers in a
+    Spark job, so the first read of each file version in a session
+    memoizes the resolved schema and later reads pass it back with
+    ``.schema(...)``, starting no job.  A rewritten file (new size or
+    mtime) or a path ``os.stat`` cannot see resolves again.  The only
+    adjustment is the nanosecond timestamp conversion above (``ts div
+    1000`` stays in whole-stage codegen; the cast is a cheap projection,
+    no shuffle).
     """
     if name not in FIXTURE_TABLES:
         raise KeyError(f"unknown fixture table {name!r}; have {sorted(FIXTURE_TABLES)}")
     if name in _TS_COLUMNS:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    key, version = os.path.abspath(path), _file_version(path)
+    memo = _SCHEMAS.setdefault(spark, {})
+    cached = memo.get(key)
+    if cached is not None and cached[0] == version:
+        schema = cached[1]
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        schema = df.schema
+        if version is not None:
+            memo[key] = (version, schema)
     for c in _TS_COLUMNS.get(name, ()):
-        if dict(df.dtypes).get(c) == "bigint":
+        if c in schema.names and schema[c].dataType == LongType():
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
 
@@ -88,8 +123,9 @@ class Catalog:
     """Lazy handle to one scale-factor directory of fixture tables.
 
     ``Catalog(spark, sf_dir).lineitem`` → DataFrame.  Each access builds a
-    fresh scan (cheap; Catalyst caches file listings per query), so callers
-    can't accidentally share cached plans across tests.
+    fresh scan, so callers can't accidentally share cached plans across
+    tests; only the resolved schema is shared, through ``read_table``'s
+    per-session memo, so repeat accesses start no Spark job.
     """
 
     def __init__(self, spark: SparkSession, sf_dir: str):
